@@ -60,8 +60,10 @@ object Explain {
   }
 
   /** The checkpoint-truncated queries' PRE-checkpoint plans, appended to
-    * their explain files: q137/q147's explains end at the final eager
-    * localCheckpoint (`Scan ExistingRDD` — a 10-line stub), q165's final
+    * their explain files: q137/q147's explains end at the final ranks (a
+    * driver-local table within the rep-graph guard, an eager
+    * localCheckpoint past it), so the appended loop body is the step the
+    * past-the-guard path runs per iteration; q165's final
     * round branches over lazily-checkpointed frames, and q157's three
     * inputs are deliberately truncated (the 2,204→334-line plan-size
     * trade). The loop/input bodies are where the iterative scale cost
@@ -83,10 +85,12 @@ object Explain {
       println(s"appended pre-checkpoint plan to $outDir/$file")
     }
     val prBody = planOf(graft.ops.Dedup.pagerankLoopBody(spark, sfDir))
-    append("q137_pagerank.txt",
-      "per-iteration loop body, pre-checkpoint (pagerankRepStep)", prBody)
-    append("q147_pagerank_converged.txt",
-      "per-iteration loop body, pre-checkpoint (pagerankRepStep)", prBody)
+    val prHeader = "per-iteration loop body of the past-the-guard path " +
+      s"(rep graphs over ${graft.ops.Dedup.PagerankDriverMaxRows} reps or " +
+      "edges; smaller ones iterate on the driver), pre-checkpoint " +
+      "(pagerankRepStep)"
+    append("q137_pagerank.txt", prHeader, prBody)
+    append("q147_pagerank_converged.txt", prHeader, prBody)
     append("q165_mmr_topk.txt",
       "round-2 selection body, pre-checkpoint (mmrRound)",
       planOf(graft.ops.Similarity.mmrLoopBody(spark, sfDir)))

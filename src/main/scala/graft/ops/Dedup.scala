@@ -1924,47 +1924,31 @@ object Dedup {
     *
     * Scale shape: the iteration runs on the exact-text-CONTRACTED rep
     * graph ([[pagerankGraph]] — copy-weighted, provably bit-equal to
-    * the member iteration), so each step is one keyed join (rank →
-    * weighted edge push) plus one keyed agg sized by the REP-level
-    * near-dup pair graph — on the 20× dup-heavy corpus that is
-    * thousands of rows per iteration where the member graph is 52M
-    * edges. Members inherit their rep's rank closed-form once at the
-    * end. Dangling docs (no out-edges) keep base rank; symmetric edges
-    * mean dangling ⟺ isolated here. Driver holds N (one scalar count)
-    * and the loop index — no row data. 3 iterations ≡ rank flow over
-    * paths of length ≤ 3, inside any near-dup cluster's diameter for
-    * the hub question; the oracle unrolls the same 3 steps as chained
-    * CTEs at MEMBER level — the hash gate is exactly the contraction's
-    * exactness proof run end-to-end.
+    * the member iteration) through the loop shared with q147 and the
+    * ingest twin, [[pagerankRanks]]: a rep graph within
+    * [[PagerankDriverMaxRows]] (reps and rep edges) is iterated on the
+    * driver over primitive Long arrays, and a larger one runs one keyed
+    * join (rank → weighted edge push) plus one keyed agg per step. On
+    * the 20× dup-heavy corpus the rep graph is thousands of rows where
+    * the member graph is 52M edges. Members inherit their rep's rank
+    * closed-form once at the end. Dangling docs (no out-edges) keep
+    * base rank; symmetric edges mean dangling ⟺ isolated here.
+    * 3 iterations ≡ rank flow over paths of length ≤ 3, inside any
+    * near-dup cluster's diameter for the hub question; the oracle
+    * unrolls the same 3 steps as chained CTEs at MEMBER level — the
+    * hash gate is exactly the contraction's exactness proof run
+    * end-to-end.
     */
   def q137Pagerank(s: SparkSession, d: String, iters: Int = 3): DataFrame = {
-    val Scale = 1000000000000L
     val (redges, repInfo, membership) = pagerankGraph(s, d) // shared w/ q147
-    val n = membership.count()
-    val base = (Scale * 15L / 100L) / n
-    // EAGER checkpoint per iteration (q147's discipline; the rank frame
-    // is two BIGINTs per rep): the lazy-chained 3-iteration plan looked
-    // harmless but measured 9.8–130 s at the 20× member graph — one
-    // nested plan makes every iteration's join subtree a sibling branch
-    // competing for memory in ONE stage graph, where the checkpointed
-    // form runs each iteration against materialized inputs. The
-    // per-iteration loop-body plan is committed via Explain
-    // (pagerankLoopBody).
-    var pr = repInfo.select(col("rep"), lit(Scale / n).as("pr"))
-      .localCheckpoint(true)
-    for (_ <- 1 to iters)
-      pr = pagerankRepStep(pr, redges, repInfo, base)
-        .select("rep", "pr").localCheckpoint(true)
-    // returned LAZY (r17): the loop's inputs are already materialized
-    // (per-iteration eager checkpoints + the persisted graph memo), so
-    // the final frame's lineage is one broadcast join + sort deep — the
-    // old `out.localCheckpoint(true)` eagerly sorted and cached the
-    // full member-level output only for the caller's action to re-read
-    // it (one whole extra job inside every run; count()-style actions
-    // don't even need the sort)
-    membership
-      .join(pr.join(repInfo.select("rep", "deg"), Seq("rep")), Seq("rep"))
-      .select(col("doc_id"), col("deg").as("degree"), col("pr").as("pr_mass"))
+    val (pr, _) = pagerankRanks(redges, repInfo, membership.count(), iters, None)
+    // returned LAZY (r17): the ranks are a driver-local frame or the
+    // last eager checkpoint and the graph memo is persisted, so the
+    // final frame's lineage is one join + sort deep — an eager
+    // checkpoint of the member-level output would only be re-read by
+    // the caller's action (one whole extra job inside every run;
+    // count()-style actions don't even need the sort)
+    pagerankDocRanks(membership, repInfo, pr)
       .orderBy(col("pr_mass").desc, col("doc_id"))
   }
 
@@ -2003,7 +1987,7 @@ object Dedup {
   private val prEdgeCache = scala.collection.concurrent.TrieMap
     .empty[(SparkSession, String, String), (DataFrame, DataFrame)]
 
-  private def pagerankGraph(s: SparkSession, d: String)
+  private[graft] def pagerankGraph(s: SparkSession, d: String)
       : (DataFrame, DataFrame, DataFrame) = {
     val membership = graft.ops.TextOps.textContraction(s, d)._2
     val (redges, repInfo) = prEdgeCache.synchronized {
@@ -2028,16 +2012,8 @@ object Dedup {
         val redges = symmetrizeEdges(repPairs)
           .repartition(col("doc_a"))
           .persist(lvl)
-        val copies = repDocs.select(col("doc_id").as("rep"), col("copies"))
-        val nbr = redges
-          .join(copies.select(col("rep").as("doc_b"), col("copies").as("cb")),
-            Seq("doc_b"))
-          .groupBy(col("doc_a").as("rep"))
-          .agg(sum("cb").as("nbr_copies"))
-        val repInfo = copies.join(nbr, Seq("rep"), "left")
-          .select(col("rep"), col("copies"),
-            (coalesce(col("nbr_copies"), lit(0L)) + col("copies") - lit(1L))
-              .as("deg"))
+        val repInfo = pagerankRepInfo(redges,
+            repDocs.select(col("doc_id").as("rep"), col("copies")))
           .persist(lvl)
         repInfo.count()
         (redges, repInfo)
@@ -2046,13 +2022,191 @@ object Dedup {
     (redges, repInfo, membership)
   }
 
+  /** Per-rep (rep, copies, deg) of a contracted graph: deg is the
+    * member-level degree Σ_{r'~r} c_{r'} + (c_r − 1) of every member of
+    * the rep (see [[pagerankGraph]]). Shared by the batch graph memo
+    * and the ingest twin's maintained graph.
+    */
+  private[graft] def pagerankRepInfo(redges: DataFrame,
+      copies: DataFrame): DataFrame = {
+    val nbr = redges
+      .join(copies.select(col("rep").as("doc_b"), col("copies").as("cb")),
+        Seq("doc_b"))
+      .groupBy(col("doc_a").as("rep"))
+      .agg(sum("cb").as("nbr_copies"))
+    copies.join(nbr, Seq("rep"), "left")
+      .select(col("rep"), col("copies"),
+        (coalesce(col("nbr_copies"), lit(0L)) + col("copies") - lit(1L))
+          .as("deg"))
+  }
+
+  /** Total integer rank mass of the PageRank family (micro-mass units;
+    * see [[q137Pagerank]]). */
+  private val PagerankScale = 1000000000000L
+
+  /** The rep graph size up to which [[pagerankRanks]] iterates on the
+    * driver: both the rep count and the directed rep-edge count must be
+    * within it. Set from the measured crossover
+    * (`Test/runMain graft.PagerankCrossoverProbe`; table in CHANGES.md).
+    * At local[3] on synthetic graphs of 2^12–2^22 edges (reps = edges/4)
+    * the driver path won at every size, but its lead shrinks with size —
+    * 8–15× at 2^15, 2.0× (fixed 3 steps) / 3.9× (residual stop) at 2^20,
+    * 1.3× / 2.2× at 2^22 — because the collects cost ~2 µs per edge on
+    * one thread while the distributed steps spread over the cores. 2^20
+    * is the largest size that keeps a ≥ 2× lead, i.e. the distributed
+    * path would need over twice these cores to catch up, and it bounds
+    * the driver's transient copy to ~1M rows per frame.
+    */
+  private[graft] val PagerankDriverMaxRows: Int = 1 << 20
+
+  /** THE integer power iteration over a contracted rep graph, shared by
+    * q137 (`tolDiv` = None: exactly `maxIters` steps), q147 and the
+    * ingest twin (`tolDiv` = Some(k): step while max |pr − prev| > tol,
+    * tol = p0 div k, at most `maxIters` steps). Returns the (rep, pr)
+    * ranks and the number of steps run.
+    *
+    * Two paths with one arithmetic. The guard is read by the collects
+    * themselves — `limit(guard + 1)` on the persisted rep info, then on
+    * the rep edges — so checking it costs no count job:
+    *  - within the guard, the steps run on the driver over primitive
+    *    Long arrays ([[pagerankOnDriver]]) and the ranks come back as a
+    *    local frame: two collects replace ~10 Spark jobs per step;
+    *  - past it (at 100 TB reps ≈ distinct texts, so this is the path
+    *    that fits), each step is [[pagerankRepStep]] against an eager
+    *    `localCheckpoint` of the previous ranks, and each superseded
+    *    checkpoint is released as soon as the next one exists.
+    * Every value is an exact BIGINT on both paths, so ranks and the
+    * residual stop — hence the step count — are bit-identical
+    * (spec-pinned with the guard forced to 0).
+    */
+  private[graft] def pagerankRanks(redges: DataFrame, repInfo: DataFrame,
+      n: Long, maxIters: Int, tolDiv: Option[Long],
+      guard: Int = PagerankDriverMaxRows): (DataFrame, Int) = {
+    val base = (PagerankScale * 15L / 100L) / n
+    val p0 = PagerankScale / n
+    val tol = tolDiv.map(p0 / _)
+    val reps = repInfo.select("rep", "copies", "deg").limit(guard + 1).collect()
+    lazy val edges = redges.select("doc_a", "doc_b").limit(guard + 1).collect()
+    if (reps.length <= guard && edges.length <= guard) {
+      val (rep, pr, it) = pagerankOnDriver(reps, edges, base, p0, maxIters, tol)
+      // the distributed path's schema (its `pr` is nullable: `div`)
+      val schema = org.apache.spark.sql.types.StructType(Seq(
+        repInfo.schema("rep"),
+        org.apache.spark.sql.types.StructField("pr",
+          org.apache.spark.sql.types.LongType)))
+      val rows = new java.util.ArrayList[org.apache.spark.sql.Row](rep.length)
+      rep.indices.foreach(i => rows.add(org.apache.spark.sql.Row(rep(i), pr(i))))
+      (repInfo.sparkSession.createDataFrame(rows, schema), it)
+    } else {
+      // EAGER checkpoint per step: a lazily chained plan measured
+      // 9.8–130 s at the 20× member graph — every step's join subtree
+      // becomes a sibling branch competing for memory in ONE stage graph
+      var pr = repInfo.select(col("rep"), lit(p0).as("pr")).localCheckpoint(true)
+      var it = 0
+      var resid = Long.MaxValue
+      while (it < maxIters && tol.forall(resid > _)) {
+        // the step carries prev as a column, so the residual is one
+        // scalar agg over the checkpointed step, not a next ⨝ prev join.
+        // Max over REPS equals max over members — members share their
+        // rep's rank exactly.
+        val next = pagerankRepStep(pr, redges, repInfo, base)
+          .localCheckpoint(true)
+        if (tol.isDefined)
+          resid = next.agg(max(abs(col("pr") - col("prev")))).head().getLong(0)
+        releaseCheckpoint(pr)
+        pr = next.select("rep", "pr")
+        it += 1
+      }
+      (pr, it)
+    }
+  }
+
+  /** [[pagerankRanks]]'s driver path: the same step as
+    * [[pagerankRepStep]] on arrays indexed by rep — share = pr div deg
+    * (deg > 0), copy-weighted push along the edges, plus the
+    * within-group term, then base + (… · 85) div 100. An edge whose ends
+    * are not both reps drops, as the distributed joins drop it. Returns
+    * the reps (ascending), their ranks and the step count.
+    */
+  private def pagerankOnDriver(reps: Array[org.apache.spark.sql.Row],
+      edges: Array[org.apache.spark.sql.Row], base: Long, p0: Long,
+      maxIters: Int, tol: Option[Long]): (Array[Long], Array[Long], Int) = {
+    val rep = reps.map(_.getLong(0))
+    java.util.Arrays.sort(rep)
+    val nr = rep.length
+    val copies = new Array[Long](nr)
+    val deg = new Array[Long](nr)
+    reps.foreach { r =>
+      val i = java.util.Arrays.binarySearch(rep, r.getLong(0))
+      copies(i) = r.getLong(1)
+      deg(i) = r.getLong(2)
+    }
+    val src = new Array[Int](edges.length)
+    val dst = new Array[Int](edges.length)
+    var ne = 0
+    edges.foreach { e =>
+      val a = java.util.Arrays.binarySearch(rep, e.getLong(0))
+      val b = java.util.Arrays.binarySearch(rep, e.getLong(1))
+      if (a >= 0 && b >= 0) { src(ne) = a; dst(ne) = b; ne += 1 }
+    }
+    val pr = Array.fill(nr)(p0)
+    val sh = new Array[Long](nr)
+    val acc = new Array[Long](nr)
+    var it = 0
+    var resid = Long.MaxValue
+    while (it < maxIters && tol.forall(resid > _)) {
+      var i = 0
+      while (i < nr) {
+        sh(i) = if (deg(i) > 0) pr(i) / deg(i) else 0L
+        acc(i) = (copies(i) - 1L) * sh(i)
+        i += 1
+      }
+      var e = 0
+      while (e < ne) {
+        acc(dst(e)) += sh(src(e)) * copies(src(e))
+        e += 1
+      }
+      resid = 0L
+      i = 0
+      while (i < nr) {
+        val next = base + acc(i) * 85L / 100L
+        resid = math.max(resid, math.abs(next - pr(i)))
+        pr(i) = next
+        i += 1
+      }
+      it += 1
+    }
+    (rep, pr, it)
+  }
+
+  /** Members inherit their rep's rank closed-form: (doc_id, degree,
+    * pr_mass) from the rep-level ranks of [[pagerankRanks]]. */
+  private[graft] def pagerankDocRanks(membership: DataFrame,
+      repInfo: DataFrame, pr: DataFrame): DataFrame =
+    membership
+      .join(pr.join(repInfo.select("rep", "deg"), Seq("rep")), Seq("rep"))
+      .select(col("doc_id"), col("deg").as("degree"), col("pr").as("pr_mass"))
+
+  /** Drop the blocks of the local checkpoint(s) a frame reads.
+    * `Dataset.unpersist()` does not: a localCheckpoint'ed RDD is not in
+    * the cache manager, so without this a superseded checkpoint stays
+    * in storage until the ContextCleaner collects its RDD.
+    */
+  private[graft] def releaseCheckpoint(df: DataFrame): Unit =
+    df.queryExecution.logical.foreach {
+      case r: org.apache.spark.sql.execution.LogicalRDD =>
+        r.rdd.unpersist(blocking = false)
+      case _ =>
+    }
+
   /** One integer power iteration at REP level, previous rank carried as
     * a column (so q147's residual is a scalar agg over the step's own
     * checkpointed output — no next ⨝ prev join): per-rep outgoing share,
     * pushed copy-weighted along rep edges, plus the within-group term,
     * all BIGINT so the agg is partition-invariant and bit-equal to the
     * member-level fold (see [[pagerankGraph]]'s exactness argument).
-    * q137 drops the `prev` column; q147 aggregates it.
+    * [[pagerankRanks]]'s past-the-guard path; q147's residual
+    * aggregates the `prev` column.
     */
   private[graft] def pagerankRepStep(pr: DataFrame, redges: DataFrame,
       repInfo: DataFrame, base: Long): DataFrame = {
@@ -2125,54 +2279,33 @@ object Dedup {
     * clique components smooth fast — early stop pays most exactly
     * where the corpus is most duplicated, which is the 100 TB case.
     *
-    * Scale shape per iteration: the q137 keyed join + keyed agg, plus
-    * ONE extra scalar agg (the residual — driver holds one Long), with
-    * eager `localCheckpoint` lineage truncation per step (the q69/q71
-    * iterative discipline; the checkpointed frame is (doc_id, pr) —
-    * two BIGINTs per doc). The driver never holds row data.
+    * Scale shape: the iterations run in [[pagerankRanks]], the loop
+    * shared with q137 — on the driver within the rep-graph guard,
+    * otherwise the q137 keyed join + keyed agg plus ONE extra scalar
+    * agg (the residual — driver holds one Long) per step, with an eager
+    * `localCheckpoint` of each step's (rep, pr, prev).
     */
   def q147PagerankConverged(s: SparkSession, d: String,
       tolDiv: Long = 10L, maxIters: Int = 12): DataFrame = {
-    val Scale = 1000000000000L
     val (redges, repInfo, membership) = pagerankGraph(s, d) // shared w/ q137
-    val n = membership.count()
-    val base = (Scale * 15L / 100L) / n
-    val p0 = Scale / n
-    val tol = p0 / tolDiv
-    var pr = repInfo.select(col("rep"), lit(p0).as("pr")).localCheckpoint(true)
-    var it = 0
-    var resid = Long.MaxValue
-    while (it < maxIters && resid > tol) {
-      // the step carries prev as a column, so the checkpointed output
-      // already holds both ranks: the residual is one scalar agg over
-      // cached partitions, not a next ⨝ prev join. Max over REPS equals
-      // max over members — members share their rep's rank exactly.
-      val next = pagerankRepStep(pr, redges, repInfo, base)
-        .localCheckpoint(true)
-      resid = next
-        .agg(max(abs(col("pr") - col("prev"))).as("r"))
-        .head().getLong(0)
-      pr = next.select("rep", "pr")
-      it += 1
-    }
+    val (pr, it) = pagerankRanks(redges, repInfo, membership.count(),
+      maxIters, Some(tolDiv))
     // returned LAZY — same reasoning as q137's final frame (r17)
-    membership
-      .join(pr.join(repInfo.select("rep", "deg"), Seq("rep")), Seq("rep"))
-      .select(col("doc_id"), col("deg").as("degree"), col("pr").as("pr_mass"),
-        lit(it.toLong).as("n_iters"))
+    pagerankDocRanks(membership, repInfo, pr)
+      .withColumn("n_iters", lit(it.toLong))
       .orderBy(col("pr_mass").desc, col("doc_id"))
   }
 
-  /** The PER-ITERATION PageRank plan, pre-checkpoint: the loop body
-    * ([[pagerankRepStep]]) over the initial rank frame, un-truncated.
-    * The committed explain for q137/q147 shows only the post-checkpoint
-    * `Scan ExistingRDD` stub — the loop body's join/agg shape (the plan
-    * each power iteration actually runs, ×iters at scale) is invisible
-    * there, so [[graft.Explain]] executes THIS frame once and appends it
-    * to the explain artifacts. Not a registered query; plan review only.
+  /** The PER-ITERATION PageRank plan of [[pagerankRanks]]'s
+    * past-the-guard path: the loop body ([[pagerankRepStep]]) over the
+    * initial rank frame, un-truncated. The committed explain for
+    * q137/q147 shows only the final ranks (a local table within the
+    * guard) — the step's join/agg shape, which each power iteration
+    * runs ×iters at scale, is invisible there, so [[graft.Explain]]
+    * executes THIS frame once and appends it to the explain artifacts.
+    * Not a registered query; plan review only.
     */
   private[graft] def pagerankLoopBody(s: SparkSession, d: String): DataFrame = {
-    val Scale = 1000000000000L
     val (redges0, repInfo0, membership) = pagerankGraph(s, d)
     // checkpoint the loop-INVARIANT inputs for the dumped plan: the
     // iterations read these frames' persisted partitions, so a plan
@@ -2183,8 +2316,8 @@ object Dedup {
     val redges = redges0.localCheckpoint(true)
     val repInfo = repInfo0.localCheckpoint(true)
     val n = membership.count()
-    val base = (Scale * 15L / 100L) / n
-    val pr = repInfo.select(col("rep"), lit(Scale / n).as("pr"))
+    val base = (PagerankScale * 15L / 100L) / n
+    val pr = repInfo.select(col("rep"), lit(PagerankScale / n).as("pr"))
       .localCheckpoint(true)
     pagerankRepStep(pr, redges, repInfo, base)
   }

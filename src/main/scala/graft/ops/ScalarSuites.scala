@@ -366,8 +366,10 @@ object ScalarSuites {
     * and pass 2's output job could not share the sort.)
     *
     * Same contract as [[globalRank]]: sort keys must be UNIQUE within a
-    * group for deterministic ranks, and group keys must be NON-NULL
-    * (the offsets join is an equi-join). Spark has no skew-safe
+    * group for deterministic ranks, and group keys must be NON-NULL:
+    * the offsets attach by equi-join, which would drop a null-keyed
+    * row, so both paths fail the job on one instead (an in-plan
+    * `raise_error` on each key — no extra job). Spark has no skew-safe
     * per-group rank primitive (`InferWindowGroupLimit` rescues only
     * constant-limit top-k, not full rankings / running sums).
     *
@@ -388,11 +390,17 @@ object ScalarSuites {
     * path below remains for arbitrary key domains, where bounds must
     * be sampled.
     */
-  def groupedRank(df: DataFrame, groupCols: Seq[String],
+  def groupedRank(df0: DataFrame, groupCols: Seq[String],
       sortCols: Seq[org.apache.spark.sql.Column], rankCol: String = "rank",
       totalCol: Option[String] = None,
       cumSums: Seq[(String, String)] = Nil,
       bucket: Option[org.apache.spark.sql.Column] = None): DataFrame = {
+    // the key itself carries the check, so column pruning cannot drop
+    // it; on a non-nullable key the optimizer folds it away
+    val df = groupCols.foldLeft(df0) { (f, g) =>
+      f.withColumn(g, coalesce(col(g),
+        raise_error(lit(s"groupedRank: null group key in column $g"))))
+    }
     if (bucket.isDefined)
       return groupedRankBucketed(df, groupCols, sortCols, rankCol,
         totalCol, cumSums, bucket.get)
@@ -560,9 +568,7 @@ object ScalarSuites {
     *
     * Same output contract as the range path (OpsSpec pins both against
     * true window semantics): unique sort keys per group, NON-NULL group
-    * keys (the offsets attach by equi-join, which drops null-keyed rows
-    * — same documented contract as the range path; every caller groups
-    * by a non-null source column).
+    * keys ([[groupedRank]] checks them in-plan before either path).
     */
   private def groupedRankBucketed(df: DataFrame, groupCols: Seq[String],
       sortCols: Seq[org.apache.spark.sql.Column], rankCol: String,

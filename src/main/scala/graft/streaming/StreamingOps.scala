@@ -1631,17 +1631,14 @@ object StreamingOps {
         added: Long): Unit = {
       val fresh = Seq(newReps, newMem, newSigs, newToks, newEdges)
         .map(_.localCheckpoint(true))
-      Seq(repsByHash, membership, repSigs, repToks, redges).foreach { df =>
-        try df.unpersist() catch { case _: Throwable => () }
-      }
+      unpersist()
       repsByHash = fresh(0); membership = fresh(1); repSigs = fresh(2)
       repToks = fresh(3); redges = fresh(4)
       nDocs += added
     }
     def unpersist(): Unit =
-      Seq(repsByHash, membership, repSigs, repToks, redges).foreach { df =>
-        try df.unpersist() catch { case _: Throwable => () }
-      }
+      Seq(repsByHash, membership, repSigs, repToks, redges)
+        .foreach(graft.ops.Dedup.releaseCheckpoint)
   }
 
   /** Build [[RepGraphState]] over the corpus at `corpusDir` — the
@@ -1715,7 +1712,7 @@ object StreamingOps {
     val b = batch.select(col("doc_id"), col("text"), md5(col("text")).as("h"))
       .localCheckpoint(true)
     val added = b.count()
-    if (added == 0) { b.unpersist(); return 0L }
+    if (added == 0) { graft.ops.Dedup.releaseCheckpoint(b); return 0L }
     val bAgg = b.groupBy("h")
       .agg(min("doc_id").as("bmin"), count(lit(1)).as("bcnt"))
       .localCheckpoint(true)
@@ -1756,9 +1753,7 @@ object StreamingOps {
     val edgesAll = relabel(state.redges, Seq("doc_a", "doc_b"))
       .unionByName(dedup.symmetrizeEdges(verified))
     state.swapAll(updatedReps, memUpdated, allSigs, allToks, edgesAll, added)
-    Seq(b, bAgg, relabels).foreach { df =>
-      try df.unpersist() catch { case _: Throwable => () }
-    }
+    Seq(b, bAgg, relabels).foreach(dedup.releaseCheckpoint)
     added
   }
 
@@ -1806,57 +1801,26 @@ object StreamingOps {
       state.repToks.unionByName(newToks))
   }
 
-  /** The batch residual-stop power iteration run VERBATIM over the
-    * maintained graph (same uniform init, same integer
-    * [[graft.ops.Dedup.pagerankRepStep]], same tol = p0/tolDiv stop,
-    * same doc-level expansion), so the stream-maintained ranks are
-    * bit-equal to q147 over the arrived corpus — including `n_iters`,
-    * because the iterate sequence is exact-integer deterministic.
-    * Returns the doc-level frame plus a cleanup handle for the
-    * per-batch scratch checkpoints.
+  /** q147's residual-stop power iteration over the maintained graph:
+    * the same rep info ([[graft.ops.Dedup.pagerankRepInfo]]), the same
+    * loop ([[graft.ops.Dedup.pagerankRanks]] — uniform init, integer
+    * step, tol = p0/tolDiv stop) and the same doc-level expansion, so
+    * the stream-maintained ranks are bit-equal to q147 over the arrived
+    * corpus — including `n_iters`, because the iterate sequence is
+    * exact-integer deterministic. Returns the doc-level frame plus a
+    * cleanup handle for the per-batch scratch checkpoints.
     */
   private def convergedDocRanks(state: RepGraphState, tolDiv: Long,
       maxIters: Int): (DataFrame, () => Unit) = {
-    val Scale = 1000000000000L
-    val n = state.nDocs
-    val base = (Scale * 15L / 100L) / n
-    val p0 = Scale / n
-    val tol = p0 / tolDiv
-    val scratch = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val copies = state.repsByHash.select(col("rep"), col("copies"))
-    val nbr = state.redges
-      .join(copies.select(col("rep").as("doc_b"), col("copies").as("cb")),
-        Seq("doc_b"))
-      .groupBy(col("doc_a").as("rep"))
-      .agg(sum("cb").as("nbr_copies"))
-    val repInfo = copies.join(nbr, Seq("rep"), "left")
-      .select(col("rep"), col("copies"),
-        (coalesce(col("nbr_copies"), lit(0L)) + col("copies") - lit(1L))
-          .as("deg"))
+    val dedup = graft.ops.Dedup
+    val repInfo = dedup.pagerankRepInfo(state.redges,
+        state.repsByHash.select(col("rep"), col("copies")))
       .localCheckpoint(true)
-    scratch += repInfo
-    var pr = repInfo.select(col("rep"), lit(p0).as("pr"))
-      .localCheckpoint(true)
-    var it = 0
-    var resid = Long.MaxValue
-    while (it < maxIters && resid > tol) {
-      val next = graft.ops.Dedup
-        .pagerankRepStep(pr, state.redges, repInfo, base)
-        .localCheckpoint(true)
-      resid = next.agg(max(abs(col("pr") - col("prev"))).as("r"))
-        .head().getLong(0)
-      try pr.unpersist() catch { case _: Throwable => () }
-      pr = next.select("rep", "pr")
-      it += 1
-    }
-    scratch += pr
-    val out = state.membership
-      .join(pr.join(repInfo.select("rep", "deg"), Seq("rep")), Seq("rep"))
-      .select(col("doc_id"), col("deg").as("degree"),
-        col("pr").as("pr_mass"), lit(it.toLong).as("n_iters"))
-    (out, () => scratch.foreach { df =>
-      try df.unpersist() catch { case _: Throwable => () }
-    })
+    val (pr, it) = dedup.pagerankRanks(state.redges, repInfo, state.nDocs,
+      maxIters, Some(tolDiv))
+    val out = dedup.pagerankDocRanks(state.membership, repInfo, pr)
+      .withColumn("n_iters", lit(it.toLong))
+    (out, () => Seq(repInfo, pr).foreach(dedup.releaseCheckpoint))
   }
 
   /** INCREMENTAL GRAPH MAINTENANCE AT INGEST — the streaming twin of

@@ -185,6 +185,29 @@ class OpsSpec extends AnyFunSuite {
     }
   }
 
+  test("groupedRank: a null group key fails the job on both paths instead of dropping the row") {
+    import spark.implicits._
+    val rows = (1 to 200).map { i =>
+      (if (i == 77) None else Some(if (i % 3 == 0) "b" else "a"), i.toLong)
+    }
+    val keyed = rows.toDF("g", "id")
+      .withColumn("hk", md5(col("id").cast("string")))
+    assert(keyed.schema("g").nullable)
+    def rank(in: org.apache.spark.sql.DataFrame,
+        bucket: Option[org.apache.spark.sql.Column]) =
+      ScalarSuites.groupedRank(in, Seq("g"), Seq(col("hk"), col("id")),
+        rankCol = "rk", bucket = bucket)
+    for (bucket <- Seq(None, Some(ScalarSuites.hexPrefixBucket(col("hk"), 64)))) {
+      val e = intercept[Exception](rank(keyed, bucket).collect())
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage))
+      assert(msgs.exists(_.contains("null group key in column g")),
+        s"unexpected failure: $e")
+      // the same nullable column without a null ranks every row
+      assert(rank(keyed.filter(col("g").isNotNull), bucket).count() == 199)
+    }
+  }
+
   test("globalRank: pinned directly against window row_number semantics (unique keys)") {
     // ADVICE r16: globalRank's rank arithmetic assumes
     // monotonically_increasing_id is CONSECUTIVE within a partition —

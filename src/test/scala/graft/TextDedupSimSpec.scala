@@ -1788,6 +1788,91 @@ class TextDedupSimSpec extends AnyFunSuite {
     assert(members(200L)._1 == 0L) // isolated: degree 0, base-only rank
   }
 
+  test("pagerank rep loop: the driver path equals the past-the-guard path bit for bit, both stop rules") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.sql.execution.LogicalRDD
+    // the q137_mixed shape: unequal exact-dup groups whose texts near-dup
+    // across groups, plus an isolated singleton
+    val baseToks = (0 until 10).map(i => s"tok$i")
+    val textB = (baseToks.take(8) ++ Seq("xb1", "xb2")).mkString(" ")
+    val rows =
+      (0 until 5).map(k => (k.toLong, baseToks.mkString(" "), "en", "s")) ++
+      (0 until 3).map(k => (100L + k, textB, "en", "s")) ++
+      Seq((200L, "zzz yyy xxx www", "en", "s"))
+    val mixed = java.nio.file.Files.createTempDirectory("q137_mixed_paths").toString
+    rows.toDF("doc_id", "text", "lang", "source")
+      .coalesce(1).write.mode("overwrite").parquet(s"$mixed/documents.parquet")
+    for (dir <- Seq(mixed, sf)) {
+      val (redges, repInfo, membership) = Dedup.pagerankGraph(spark, dir)
+      val n = membership.count()
+      val info = repInfo.collect()
+      assert(info.exists(_.getAs[Long]("deg") == 0L), s"$dir: no deg-0 rep")
+      // sf0.001 has no exact duplicates; the mixed fixture carries the
+      // multi-copy reps (within-group term, copy-weighted push)
+      if (dir == mixed)
+        assert(info.exists(_.getAs[Long]("copies") > 1L), "no multi-copy rep")
+      for ((iters, tolDiv) <- Seq((3, None), (12, Some(10L)))) {
+        val (drv, drvIt) = Dedup.pagerankRanks(redges, repInfo, n, iters, tolDiv)
+        val held = spark.sparkContext.getPersistentRDDs.size
+        val (dist, distIt) =
+          Dedup.pagerankRanks(redges, repInfo, n, iters, tolDiv, guard = 0)
+        // every superseded step checkpoint is released: only the last stays
+        assert(spark.sparkContext.getPersistentRDDs.size - held <= 1)
+        // the default guard takes the driver path here; guard 0 cannot
+        assert(drv.queryExecution.analyzed.isInstanceOf[LocalRelation])
+        assert(dist.queryExecution.analyzed
+          .collectFirst { case r: LogicalRDD => r }.isDefined)
+        assert(drv.schema == dist.schema)
+        assert(drvIt == distIt, s"$dir tolDiv=$tolDiv: step counts differ")
+        if (tolDiv.isEmpty) assert(drvIt == 3)
+        def ranks(df: org.apache.spark.sql.DataFrame) =
+          df.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+        val want = ranks(dist)
+        assert(want.length == info.length)
+        assert(ranks(drv) == want, s"$dir tolDiv=$tolDiv: ranks differ")
+        Dedup.releaseCheckpoint(dist)
+        assert(spark.sparkContext.getPersistentRDDs.size - held <= 0)
+      }
+    }
+  }
+
+  test("q137 job budget: a warm q137 runs at most 12 Spark jobs") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    // measured 9 (the driver-path loop); the per-iteration distributed
+    // loop ran 32 here, so a change that brings per-step jobs back at
+    // rep-graph sizes fails this budget
+    val budget = 12
+    Dedup.q137Pagerank(spark, sf).collect() // warm the graph memo
+    val sc = spark.sparkContext
+    val group = s"q137-budget-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val done = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        e.properties.getProperty("spark.jobGroup.id") match {
+          case `group` => jobs.incrementAndGet()
+          case g if g == s"$group-end" => done.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "q137 job budget")
+      Dedup.q137Pagerank(spark, sf).collect()
+      // listener events arrive in order: once this marker job is seen,
+      // every q137 job has been counted
+      sc.setJobGroup(s"$group-end", "q137 job budget marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    assert(jobs.get > 0 && jobs.get <= budget,
+      s"q137 ran ${jobs.get} jobs, budget $budget")
+  }
+
   test("q138 token fertility: matches a JVM reference; exact integer sums") {
     val docs = Tables.documents(spark, sf)
       .select("lang", "source", "text").collect()
